@@ -7,10 +7,17 @@ Reference topology (TransactionProcessor.java:27-54):
     JSON) -> filter(non-null) -> peek(log) -> to(output)
 
 Spark mapping: every stage is a narrow op (no shuffle), so the whole
-topology fuses into ONE whole-stage-codegen span over the scan — the analog
-of Kafka Streams' single sub-topology. ``from_json`` returns a null struct
+topology runs as ONE stage over the source — the analog of Kafka Streams'
+single sub-topology. Its physical plan is three operators: the source in a
+codegen span, a ``Generate`` that evaluates ``from_json`` once per record
+(``from_json`` has no codegen), then one codegen span for the drop filter,
+the branch and the output projection. ``from_json`` returns a null struct
 on corrupt input, matching the reference's null-on-parse-error + drop
 contract exactly (TransactionProcessor.java:32-37).
+
+The parse must stay one ``Generate``: Catalyst pushes a filter through a
+``Project`` by substituting its aliases without weighing their cost, which
+would copy ``from_json`` (and any projection under it) into the filter.
 
 Scale: stateless and embarrassingly parallel — partition count = source
 parallelism, no skew concern, no state store.
@@ -35,14 +42,14 @@ def parse_wire(df: DataFrame, value_col: str = "value") -> DataFrame:
     """JSON wire string -> typed columns; corrupt payloads dropped.
 
     Mirrors R4+R5 (TransactionProcessor.java:29-37): parse error => null =>
-    filtered out. Extra/unknown JSON fields are ignored by name-match, like
-    Jackson POJO binding.
+    filtered out. A null struct inlines to an all-null row, so the one
+    ``userId`` check drops both corrupt records and records without a user.
+    Extra/unknown JSON fields are ignored by name-match, like Jackson POJO
+    binding.
     """
-    parsed = df.withColumn("tx", F.from_json(F.col(value_col), TRANSACTION_DDL))
-    return (
-        parsed.filter(F.col("tx").isNotNull() & F.col("tx.userId").isNotNull())
-        .select("tx.userId", "tx.amount", "tx.timestamp")
-        .withColumn("event_time", F.timestamp_seconds(F.col("timestamp")))
+    tx = df.select(F.inline(F.array(F.from_json(F.col(value_col), TRANSACTION_DDL))))
+    return tx.filter(F.col("userId").isNotNull()).withColumn(
+        "event_time", F.timestamp_seconds(F.col("timestamp"))
     )
 
 

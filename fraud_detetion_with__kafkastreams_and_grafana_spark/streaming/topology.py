@@ -40,7 +40,9 @@ def wire_stream_from_kafka(
 def fraud_topology(wire: DataFrame, threshold: float = FRAUD_THRESHOLD) -> DataFrame:
     """R4-R8: parse (null-on-corrupt -> drop) then the strict-> fraud
     branch. Works identically on bounded and unbounded DataFrames —
-    all narrow ops, one codegen stage, no state."""
+    all narrow ops, one stage, no state. The parse is a single
+    ``Generate`` (see operators/detect), and the branch filter fuses into
+    the codegen span above it."""
     tx = parse_wire(wire)
     return tx.filter(fraud_predicate(F.col("amount"), threshold))
 

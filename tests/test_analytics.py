@@ -65,6 +65,45 @@ def test_malformed_json_dropped(spark):
     assert all(r.event_time is not None for r in out)
 
 
+def test_parse_wire_drop_contract_edges(spark):
+    """A record is kept iff it parses to an object with a non-null userId.
+    A field that fails its type stays null in a kept record; an array,
+    JSON null, an empty string and a SQL NULL are all dropped."""
+    import datetime
+
+    payloads = [
+        '{"userId":"u1","amount":"x","timestamp":1}',  # type mismatch: kept, amount null
+        '{"amount":5.0,"timestamp":2}',  # missing userId
+        '{"userId":null,"amount":5.0,"timestamp":3}',
+        "null",
+        "",
+        '[{"userId":"u2","amount":1.0,"timestamp":4}]',
+        None,
+        '{"userId":"u3","amount":2.0,"timestamp":5,"extra":{"a":1},"more":[1]}',
+        '{"userId":"u4","amount":1e400,"timestamp":6}',  # overflows to inf
+    ]
+    df = spark.createDataFrame([(p,) for p in payloads], "value string")
+    parsed = parse_wire(df)
+    assert parsed.schema.simpleString() == (
+        "struct<userId:string,amount:double,timestamp:bigint,event_time:timestamp>"
+    )
+
+    def at(s):
+        return datetime.datetime(1970, 1, 1) + datetime.timedelta(seconds=s)
+
+    rows = sorted(
+        (r.userId, r.amount, r.timestamp, r.event_time)
+        for r in parsed.withColumn(
+            "event_time", F.col("event_time").cast("timestamp_ntz")
+        ).collect()
+    )
+    assert rows == [
+        ("u1", None, 1, at(1)),
+        ("u3", 2.0, 5, at(5)),
+        ("u4", float("inf"), 6, at(6)),
+    ]
+
+
 def test_branches_partition_input(spark, sf_dir):
     from fraud_detetion_with__kafkastreams_and_grafana_spark.operators.detect import (
         EVENTS_FRAUD_THRESHOLD,

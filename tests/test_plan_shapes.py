@@ -50,6 +50,39 @@ def _subtrees(plan: str, op: str) -> list[list[str]]:
     return out
 
 
+def test_wire_parse_runs_once_per_record(spark, sf_dir):
+    """Each wire record is serialized once and parsed once. A drop filter
+    pushed through the parse projection would inline `from_json`, and the
+    projection feeding it, once per referenced field."""
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.operators.detect import (
+        parse_wire,
+        serialize_wire,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.plans import analytics
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.streaming.generator import (
+        batch_transactions,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.streaming.topology import (
+        alerts_as_points,
+        fraud_topology,
+    )
+    from fraud_detetion_with__kafkastreams_and_grafana_spark.streaming.windows import (
+        windowed_amounts,
+    )
+
+    wire = serialize_wire(batch_transactions(spark, 1000))
+    plans = {
+        "alerts": alerts_as_points(fraud_topology(wire)),
+        "windows": windowed_amounts(parse_wire(wire)),
+        "q6": analytics.QUERIES["q6_wire_roundtrip"](spark, sf_dir),
+    }
+    for name, df in plans.items():
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+        # The optimizer rewrites `to_json` into an invoke of its evaluator.
+        assert p.count("from_json(") == 1, (name, p)
+        assert p.count("StructsToJsonEvaluator") == 1, (name, p)
+
+
 def test_r67_both_window_fns_share_one_shuffle(spark, sf_dir):
     p = _plan(relational3.QUERIES["r67_range_frame_window"](spark, sf_dir))
     assert p.count("Exchange hashpartitioning") == 1, p
